@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.util.regex.Pattern
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,10 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark design: the GlobalKTable (fully replicated table) maps to a
   * BROADCAST side of a left_anti join — no shuffle of the message
-  * stream, exactly the GlobalKTable contract. The censor is a fold of
-  * codegen'd `regexp_replace` built-ins (parity path) or the single-pass
-  * [[graft.functions.CensorText]] expression (scale path, registered as
-  * SQL function `censor_text`). Everything here is a pure
+  * stream, exactly the GlobalKTable contract. The censor is the
+  * reference's sequential word fold computed by one codegen'd
+  * [[graft.functions.CensorText]] expression (also registered as SQL
+  * function `censor_text`). Everything here is a pure
   * DataFrame -> DataFrame function, legal in both batch and Structured
   * Streaming (stream-static join + narrow projection).
   */
@@ -62,10 +60,12 @@ object Moderation {
 
   /** J1+P2: drop messages whose `receiver:sender` is a blocked pair.
     * `blocked` must have a single column with the pair key. Broadcast +
-    * left_anti: zero shuffle on the (large) message side.
+    * left_anti: zero shuffle on the (large) message side. Duplicate
+    * keys cannot change an anti-join's result, so the broadcast side is
+    * not de-duplicated (that would add a shuffle to every job).
     */
   def dropBlocked(messages: DataFrame, blocked: DataFrame): DataFrame = {
-    val keys = blocked.toDF("__blocked_key").distinct()
+    val keys = blocked.toDF("__blocked_key")
     messages.join(
       broadcast(keys),
       blockedKey(messages("receiver"), messages("sender")) === col("__blocked_key"),
@@ -75,10 +75,11 @@ object Moderation {
   /** The literal two-step reference form (left_outer + IS NULL filter,
     * KafkaStreamApp.java:157-166) — kept for parity testing; Catalyst
     * may not rewrite this to anti-join, so [[dropBlocked]] is the
-    * production form.
+    * production form. Duplicate keys only multiply matched rows, which
+    * the IS NULL filter drops.
     */
   def dropBlockedTwoStep(messages: DataFrame, blocked: DataFrame): DataFrame = {
-    val keys = blocked.toDF("__blocked_key").distinct()
+    val keys = blocked.toDF("__blocked_key")
     messages.join(
         broadcast(keys),
         blockedKey(messages("receiver"), messages("sender")) === col("__blocked_key"),
@@ -95,31 +96,25 @@ object Moderation {
       .select(col(wordCol)).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
 
-  /** U4 parity path: sequential fold of case-insensitive literal
-    * replacements, each over the already-rewritten string — the exact
-    * reference semantics (MessageFilterProcessor.java:38-41). Null text
-    * stays null (regexp_replace is null-safe), satisfying U5.
+  /** U4: the reference's censor (MessageFilterProcessor.java:38-41) —
+    * for each word in order, a case-insensitive literal replacement by
+    * '*' × word length over the already-rewritten text — as ONE
+    * [[graft.functions.CensorText]] expression, exact for any
+    * vocabulary. Null text stays null (U5).
     *
     * The word list is plan-time state (the reference's GlobalKTable
     * store is tiny and fully replicated; here it folds into the plan —
-    * the moral equivalent of broadcast). For large word lists prefer
-    * [[censorSinglePass]].
+    * the moral equivalent of broadcast).
     */
   def censorFold(text: Column, words: Seq[String]): Column =
-    words.foldLeft(text) { (c, w) =>
-      regexp_replace(c, lit("(?i)" + Pattern.quote(w)), lit("*" * w.length))
-    }
+    graft.functions.CensorText(text, words)
 
-  /** True iff the sequential fold ([[censorFold]]) and the single-pass
-    * longest-first alternation ([[censorSinglePass]]) provably agree for
-    * EVERY input: no word may be a substring of another (fold order vs
-    * longest-first would pick different matches, e.g. words ["b","ab"]
-    * on "ab": fold → "a*", single-pass → "**"), and no proper suffix of
-    * one word may be a prefix of another (masking one match could
-    * destroy or shift an overlapping match of the other, e.g.
-    * ["bc","ab"] on "abc": fold with "bc" first → "a**", single-pass →
-    * "**c"). Comparison is ASCII-case-insensitive like the censor
-    * itself. Conservative: rejects some lists that happen to agree.
+  /** True iff no word is an ASCII-case-insensitive substring of another
+    * and no proper suffix of one word is a prefix of another, i.e. the
+    * censor's result cannot depend on word order (e.g. ["b","ab"] on
+    * "ab" folds to "a*", but "**" in the other order; ["bc","ab"] on
+    * "abc" folds to "a**", but "**c" in the other order). Selects no
+    * code path; kept as a vocabulary property the benchmark reports.
     */
   def singlePassEquivalent(words: Seq[String]): Boolean = {
     val ws = words.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
@@ -130,38 +125,15 @@ object Moderation {
     }
   }
 
-  /** U4 scale path: ONE pass over the text with an alternation regex,
-    * masking each match with '*' of match length. O(text) instead of
-    * O(words * text). Guarded: refuses word lists where the single-pass
-    * result could differ from the reference's sequential fold (see
-    * [[singlePassEquivalent]]) — callers with such lists must use
-    * [[censorFold]], which IS the reference semantics.
-    */
-  def censorSinglePass(text: Column, words: Seq[String]): Column = {
-    require(singlePassEquivalent(words),
-      s"censorSinglePass requires substring- and overlap-free words " +
-        s"(got ${words.mkString("[", ", ", "]")}); use censorFold for " +
-        "order-dependent vocabularies")
-    graft.functions.CensorText(text, words)
-  }
-
-  /** Full flagship pipeline over (sender, text, receiver) messages.
-    * `singlePass = true` is an optimization HINT: the O(text)
-    * single-pass censor is used only when provably equivalent to the
-    * reference's sequential fold ([[singlePassEquivalent]]); otherwise
-    * the fold — which IS the reference semantics — runs regardless.
+  /** Full flagship pipeline over (sender, text, receiver) messages:
+    * [[dropBlocked]], then [[censorFold]] on `text`. `singlePass` is
+    * ignored: there is one exact censor, so there is nothing to select.
+    * The parameter stays only because the benchmark harness under
+    * `perfbench/` still passes it.
     */
   def pipeline(messages: DataFrame, blockedPairs: DataFrame,
-               banWords: Seq[String], singlePass: Boolean = false): DataFrame = {
-    val survivors = dropBlocked(messages, blockedPairs)
-    val censor =
-      if (singlePass && singlePassEquivalent(banWords))
-        // already proven safe above; skip censorSinglePass's require
-        // (it re-runs the same quadratic pair scan)
-        graft.functions.CensorText(col("text"), banWords)
-      else censorFold(col("text"), banWords)
-    survivors.withColumn("text", censor)
-  }
+               banWords: Seq[String], singlePass: Boolean = false): DataFrame =
+    dropBlocked(messages, blockedPairs).withColumn("text", censorFold(col("text"), banWords))
 
   /** P1 (`peek`): the reference logs every record pre-join and
     * post-censor (KafkaStreamApp.java:155,168). The Spark-native form

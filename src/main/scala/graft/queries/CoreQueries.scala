@@ -146,7 +146,7 @@ object CoreQueries {
          |              WHERE b.bk = (d.lang || ':' || d.source))
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val m = messages(s, dir)
-      val keys = blockedPairs(s, dir).toDF("bk").distinct()
+      val keys = blockedPairs(s, dir).toDF("bk")
       m.join(broadcast(keys),
           Moderation.blockedKey(m("receiver"), m("sender")) === col("bk"), "left_semi")
         .select("doc_id", "sender", "receiver")
@@ -159,17 +159,6 @@ object CoreQueries {
          |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
       docs(s, dir)
         .select(col("doc_id"), Moderation.censorFold(col("text"), banWords).as("text"))
-        .orderBy("doc_id")
-    },
-
-    // U4 scale path: single-pass native CensorText expression — same
-    // output, one scan (oracle identical to censor_fold by equivalence)
-    Q("censor_expr",
-      s"""SELECT doc_id, ${duckCensor("text")} AS text
-         |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"),
-          Moderation.censorSinglePass(col("text"), banWords).as("text"))
         .orderBy("doc_id")
     },
 

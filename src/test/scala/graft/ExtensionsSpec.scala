@@ -68,5 +68,7 @@ class ExtensionsSpec extends SparkSpec {
       "SELECT censor_text(text, 'spark', 'java') AS t FROM ct_in")
       .as[String].head()
     assert(out === "I like ***** and *****")
+    // words fold in argument order: "b" masks first, leaving no "ab"
+    assert(spark.sql("SELECT censor_text('ab', 'b', 'ab') AS t").as[String].head() === "a*")
   }
 }

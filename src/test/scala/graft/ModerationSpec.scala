@@ -44,10 +44,8 @@ class ModerationSpec extends SparkSpec {
 
   test("golden output matches reference (single-pass CensorText path)") {
     // The golden vocab has a Cyrillic 'а' suffix-prefix overlap
-    // (Политика/Алкоголь), so pipeline(singlePass = true) correctly
-    // falls back to the fold; exercise the CensorText expression
-    // directly — on the fixture (no overlapping occurrences) the
-    // longest-first single pass agrees with the reference output.
+    // (Политика/Алкоголь); the ignored singlePass hint and the
+    // CensorText column entry point both give the reference output.
     assert(!Moderation.singlePassEquivalent(
       Moderation.activeBanWords(goldenWords, "word", "value")))
     assert(runPipeline(singlePass = true) === Seq(
@@ -84,15 +82,11 @@ class ModerationSpec extends SparkSpec {
   }
 
   test("regex metacharacters in words are literal (Pattern.quote)") {
-    for (single <- Seq(false, true)) {
-      val censor =
-        if (single) Moderation.censorSinglePass($"text", Seq("C++", "a.b"))
-        else Moderation.censorFold($"text", Seq("C++", "a.b"))
-      val out = Seq(("I like C++ and aXb and a.b", 1)).toDF("text", "i")
-        .select(censor.as("t")).as[String].head()
-      // "a.b" must NOT match "aXb" (dot is literal); "C++" masked as 3 chars
-      assert(out === "I like *** and aXb and ***", s"singlePass=$single")
-    }
+    val out = Seq(("I like C++ and aXb and a.b", 1)).toDF("text", "i")
+      .select(Moderation.censorFold($"text", Seq("C++", "a.b")).as("t"))
+      .as[String].head()
+    // "a.b" must NOT match "aXb" (dot is literal); "C++" masked as 3 chars
+    assert(out === "I like *** and aXb and ***")
   }
 
   test("oracle duckCensor quotes regex metachars to match the literal engine") {
@@ -148,38 +142,27 @@ class ModerationSpec extends SparkSpec {
   }
 
   test("empty word list censor is identity") {
-    for (single <- Seq(false, true)) {
-      val censor =
-        if (single) Moderation.censorSinglePass($"text", Nil)
-        else Moderation.censorFold($"text", Nil)
-      val out = Seq(("unchanged", 1)).toDF("text", "i")
-        .select(censor.as("t")).as[String].head()
-      assert(out === "unchanged")
-    }
+    val out = Seq(("unchanged", 1)).toDF("text", "i")
+      .select(Moderation.censorFold($"text", Nil).as("t")).as[String].head()
+    assert(out === "unchanged")
   }
 
-  test("censorSinglePass rejects vocabularies where fold and single-pass diverge") {
-    // substring pair: fold(["b","ab"]) on "ab" -> "a*", single-pass -> "**"
+  test("order-dependent vocabularies fold in the given word order") {
+    def fold(text: String, words: Seq[String]): String =
+      Seq((text, 1)).toDF("text", "i")
+        .select(Moderation.censorFold($"text", words).as("t")).as[String].head()
+    // substring pair: "b" masks first, leaving no "ab" to match
     assert(!Moderation.singlePassEquivalent(Seq("b", "ab")))
-    intercept[IllegalArgumentException] {
-      Moderation.censorSinglePass($"text", Seq("b", "ab"))
-    }
-    // suffix-prefix overlap: fold(["bc","ab"]) on "abc" -> "a**",
-    // single-pass (leftmost match wins) -> "**c"
+    assert(fold("ab", Seq("b", "ab")) === "a*")
+    assert(fold("ab", Seq("ab", "b")) === "**")
+    // suffix-prefix overlap: "bc" masks first and destroys "ab"
     assert(!Moderation.singlePassEquivalent(Seq("bc", "ab")))
-    intercept[IllegalArgumentException] {
-      Moderation.censorSinglePass($"text", Seq("bc", "ab"))
-    }
+    assert(fold("abc", Seq("bc", "ab")) === "a**")
+    assert(fold("abc", Seq("ab", "bc")) === "**c")
     // case-insensitive like the censor itself
     assert(!Moderation.singlePassEquivalent(Seq("AB", "b")))
-    // the fixture vocab is safe
+    // the fixture vocab is order-independent
     assert(Moderation.singlePassEquivalent(CoreWords.words))
-    // divergence witness: fold really does differ from what a
-    // single pass would produce, which is why the guard exists
-    val folded = Seq(("ab", 1)).toDF("text", "i")
-      .select(Moderation.censorFold($"text", Seq("b", "ab")).as("t"))
-      .as[String].head()
-    assert(folded === "a*")
   }
 
   test("null receiver/sender yields a NULL blocked key that never matches") {
@@ -200,14 +183,64 @@ class ModerationSpec extends SparkSpec {
       "keep: null receiver", "keep: null sender"))
   }
 
-  test("overlapping-occurrence words: fold and single-pass agree on fixture vocab") {
+  test("fixture vocab: censorFold == sequential replaceAll on sf0.001 documents") {
     val words = CoreWords.words
-    val df = Tables.load(spark, sf0001, "documents")
-    val diff = df.select(
-        Moderation.censorFold($"text", words).as("a"),
-        Moderation.censorSinglePass($"text", words).as("b"))
-      .filter($"a" =!= $"b").count()
-    assert(diff === 0)
+    val rows = Tables.load(spark, sf0001, "documents")
+      .select($"text", Moderation.censorFold($"text", words).as("t"))
+      .as[(String, String)].collect()
+    assert(rows.exists { case (text, t) => text != t })
+    rows.foreach { case (text, t) =>
+      assert(t === (if (text == null) null else CensorProps.foldRef(text, words)))
+    }
+  }
+
+  test("300-word order-dependent vocabulary: one codegen'd CensorText, exact fold") {
+    // stems plus their prefixes, infixes, extended forms and upper-case
+    // spellings: many substring and suffix-prefix overlaps, unsorted
+    val rnd = new scala.util.Random(42)
+    def stem(): String = Seq.fill(5 + rnd.nextInt(4))("abcdeiklmnorst"(rnd.nextInt(14))).mkString
+    val words = Iterator.continually(stem()).flatMap { w =>
+      Seq(w, w.take(3), w.slice(1, 4), w + "er", (w.drop(2) + "s").toUpperCase)
+    }.distinct.take(300).toSeq
+    assert(words.size === 300 && !Moderation.singlePassEquivalent(words))
+    val fillers = Seq(" ", ", ", " а ", "! ", "É")
+    val texts = (0 until 400).map { i =>
+      val n = 3 + rnd.nextInt(10)
+      val body = Seq.fill(n) {
+        val w = words(rnd.nextInt(words.size))
+        (if (rnd.nextBoolean()) w.toUpperCase else w) + fillers(rnd.nextInt(fillers.size))
+      }.mkString
+      (i, if (i % 50 == 0) null else body)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("censor300").resolve("t").toString
+    texts.toDF("id", "text").write.parquet(dir)
+
+    val key = "spark.sql.codegen.fallback"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val df = spark.read.parquet(dir)
+        .select($"id", $"text", Moderation.censorFold($"text", words).as("t"))
+      val rows = df.as[(Int, String, String)].collect()
+      assert(rows.length === texts.size)
+      assert(rows.count { case (_, text, t) => text != t } > texts.size / 2)
+      rows.foreach { case (id, text, t) =>
+        assert(t === (if (text == null) null else CensorProps.foldRef(text, words)), s"id=$id")
+      }
+
+      val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case e => e })
+      assert(exprs.count(_.isInstanceOf[graft.functions.CensorText]) === 1)
+      assert(!exprs.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace]))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l =>
+        l.contains("censor_text") && l.trim.startsWith("*(")),
+        s"censor project not codegen'd:\n$plan")
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }
 

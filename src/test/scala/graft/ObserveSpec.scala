@@ -53,7 +53,7 @@ class ObserveSpec extends SparkSpec {
     // must read a non-local source: projections over LocalRelation are
     // evaluated at optimization time (ConvertToLocalRelation)
     val df = Tables.load(spark, sf0001, "documents")
-      .select(Moderation.censorSinglePass(col("text"), Seq("spark")).as("t"))
+      .select(Moderation.censorFold(col("text"), Seq("spark")).as("t"))
     val plan = df.queryExecution.executedPlan.toString
     // "*(n)" is the WholeStageCodegen marker in stringified plans —
     // the censor Project must carry it (no CodegenFallback inserted)

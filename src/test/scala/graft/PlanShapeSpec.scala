@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+
 /** Physical-plan shape assertions (SURVEY §4): the properties that make
   * these plans scale — pushed-down scans, broadcast (not shuffled)
   * dimension joins, map-side partial aggregation — verified against the
@@ -12,6 +16,14 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.allQueries.find(_.name == name).get
       .run(spark, sf0001).queryExecution.executedPlan.toString
+
+  /** The physical plan after exchange planning, before AQE runs it. */
+  private def physical(name: String): SparkPlan =
+    SparkEntry.allQueries.find(_.name == name).get
+      .run(spark, sf0001).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
 
   test("source_scan pushes the shipdate filter and prunes columns") {
     val p = plan("source_scan")
@@ -29,6 +41,15 @@ class PlanShapeSpec extends SparkSpec {
       assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
         s"$name: expected broadcast LEFT ANTI:\n$p")
       assert(!p.contains("SortMergeJoin"), s"$name: dimension join shuffled")
+    }
+    // duplicate keys cannot change an anti/semi join, so the broadcast
+    // side must not be de-duplicated through a shuffle
+    for (name <- Seq("anti_join_blocked", "moderation_pipeline",
+                     "left_outer_null_probe", "semi_join_blocked")) {
+      val sides = physical(name).collect { case b: BroadcastExchangeExec => b.child }
+      assert(sides.nonEmpty, s"$name: no broadcast side")
+      sides.foreach(side => assert(side.collectFirst { case e: Exchange => e }.isEmpty,
+        s"$name: broadcast side shuffles:\n$side"))
     }
   }
 
