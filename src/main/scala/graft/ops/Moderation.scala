@@ -1,7 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan,
+  Range => RangeRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{BlockedKeys, BlockedProbe}
 
 /** The reference's flagship message-moderation pipeline, Spark-first.
   *
@@ -16,14 +24,17 @@ import org.apache.spark.sql.functions._
   *  - null message / null text passes through untouched
   *    (MessageFilterProcessor.java:23-25).
   *
-  * Spark design: the GlobalKTable (fully replicated table) maps to a
-  * BROADCAST side of a left_anti join — no shuffle of the message
-  * stream, exactly the GlobalKTable contract. The censor is the
+  * Spark design: the GlobalKTable (a fully replicated store loaded
+  * once, then probed per record) maps to a broadcast
+  * [[graft.functions.BlockedKeys]] set, built once per snapshot of the
+  * blocked table and probed by one codegen'd
+  * [[graft.functions.BlockedProbe]] filter — no shuffle of the message
+  * stream and no join, exactly the GlobalKTable contract. The censor is the
   * reference's sequential word fold computed by one codegen'd
   * [[graft.functions.CensorText]] expression (also registered as SQL
   * function `censor_text`). Everything here is a pure
   * DataFrame -> DataFrame function, legal in both batch and Structured
-  * Streaming (stream-static join + narrow projection).
+  * Streaming (a narrow filter + projection).
   */
 object Moderation {
 
@@ -34,7 +45,7 @@ object Moderation {
     * (KafkaStreamApp.java:158). Null-propagating (`concat`, the SQL
     * `||` semantics): a null receiver or sender yields a NULL key,
     * which never equals any blocked key — so such messages always pass
-    * the anti-join. This is deliberately NOT `concat_ws` (which skips
+    * [[dropBlocked]] (whose probe follows the same rule). This is deliberately NOT `concat_ws` (which skips
     * nulls): a skipped null receiver would collapse the key to the bare
     * sender, which can collide with a real `a:b` key when a sender
     * contains ':'. The reference would NPE on a null field upstream, so
@@ -59,24 +70,85 @@ object Moderation {
   }
 
   /** J1+P2: drop messages whose `receiver:sender` is a blocked pair.
-    * `blocked` must have a single column with the pair key. Broadcast +
-    * left_anti: zero shuffle on the (large) message side. Duplicate
-    * keys cannot change an anti-join's result, so the broadcast side is
-    * not de-duplicated (that would add a shuffle to every job).
+    * `blocked` must have a single column with the pair key (cast to
+    * string). The keys are collected into a [[BlockedKeys]] set that is
+    * broadcast once per snapshot of `blocked` and probed by a
+    * [[BlockedProbe]] filter: zero shuffle and no join on the (large)
+    * message side, and no re-read of the dimension by later jobs or
+    * micro-batches over the same snapshot. A null receiver or sender
+    * never matches; null and duplicate keys are skipped.
+    *
+    * The blocked side is state fixed when this is called, as the word
+    * list is: a file source's listing is fixed when its frame is
+    * created anyway, and a fresh `read` of a changed directory is a new
+    * snapshot. A live dimension is the job of
+    * [[graft.streaming.ModerationStream.withLiveDimension]].
     */
   def dropBlocked(messages: DataFrame, blocked: DataFrame): DataFrame = {
-    val keys = blocked.toDF("__blocked_key")
-    messages.join(
-      broadcast(keys),
-      blockedKey(messages("receiver"), messages("sender")) === col("__blocked_key"),
-      "left_anti")
+    val keys = KeySnapshots.broadcast(messages.sparkSession.sparkContext, blocked)
+    messages.filter(!BlockedProbe(messages("receiver"), messages("sender"), keys))
+  }
+
+  /** Broadcast key sets of recent blocked-table snapshots. A snapshot is
+    * the SparkContext (a stopped context's broadcasts are never reused),
+    * the canonicalized analyzed plan, and the listing (path, length,
+    * modification time) of each file relation in it: two reads of one
+    * directory are the same plan even after the directory changed. Only
+    * deterministic plans over file relations, local relations and
+    * ranges are memoized; any other frame's set is built on every call.
+    * Eviction only drops the reference; the ContextCleaner reclaims a
+    * broadcast once no plan holds it.
+    */
+  private object KeySnapshots {
+    private final case class Snapshot(sc: SparkContext, plan: LogicalPlan,
+                                      files: Seq[(String, Long, Long)])
+
+    private val MaxEntries = 8
+    private val memo = new java.util.LinkedHashMap[Snapshot, Broadcast[BlockedKeys]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Snapshot, Broadcast[BlockedKeys]]): Boolean = size > MaxEntries
+    }
+
+    def broadcast(sc: SparkContext, blocked: DataFrame): Broadcast[BlockedKeys] =
+      snapshot(sc, blocked) match {
+        case None => build(sc, blocked)
+        case Some(key) =>
+          val hit = memo.synchronized {
+            memo.keySet.removeIf(_.sc.isStopped)
+            Option(memo.get(key))
+          }
+          hit.getOrElse {
+            val built = build(sc, blocked)
+            memo.synchronized(Option(memo.putIfAbsent(key, built)).getOrElse(built))
+          }
+      }
+
+    private def build(sc: SparkContext, blocked: DataFrame): Broadcast[BlockedKeys] = {
+      val keys = blocked.toDF("__blocked_key").select(col("__blocked_key").cast("string"))
+      sc.broadcast(BlockedKeys(keys.as(Encoders.STRING).collect()))
+    }
+
+    private def snapshot(sc: SparkContext, blocked: DataFrame): Option[Snapshot] = {
+      val plan = blocked.queryExecution.analyzed
+      val listings = plan.collectWithSubqueries { case leaf: LeafNode => leaf }.map {
+        case r: LogicalRelation => r.relation match {
+          case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+            Some(index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)))
+          case _ => None
+        }
+        case _: LocalRelation | _: RangeRelation => Some(Nil)
+        case _ => None
+      }
+      if (plan.deterministic && listings.forall(_.isDefined))
+        Some(Snapshot(sc, plan.canonicalized, listings.flatten.flatten.sorted))
+      else None
+    }
   }
 
   /** The literal two-step reference form (left_outer + IS NULL filter,
-    * KafkaStreamApp.java:157-166) — kept for parity testing; Catalyst
-    * may not rewrite this to anti-join, so [[dropBlocked]] is the
-    * production form. Duplicate keys only multiply matched rows, which
-    * the IS NULL filter drops.
+    * KafkaStreamApp.java:157-166) as a broadcast join — kept for parity
+    * testing; [[dropBlocked]] is the production form. Duplicate keys
+    * only multiply matched rows, which the IS NULL filter drops.
     */
   def dropBlockedTwoStep(messages: DataFrame, blocked: DataFrame): DataFrame = {
     val keys = blocked.toDF("__blocked_key")

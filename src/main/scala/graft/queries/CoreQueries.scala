@@ -114,7 +114,7 @@ object CoreQueries {
         .orderBy("doc_id")
     },
 
-    // J1 production form: broadcast LEFT ANTI on the derived key
+    // J1 production form: the derived key probed in a broadcast key set
     Q("anti_join_blocked",
       s"""SELECT doc_id, source AS sender, lang AS receiver
          |FROM documents d
@@ -202,7 +202,7 @@ object CoreQueries {
         .orderBy("user_id")
     },
 
-    // §3.3 flagship: full moderation pipeline (anti-join + censor)
+    // §3.3 flagship: full moderation pipeline (blocked-pair drop + censor)
     Q("moderation_pipeline",
       s"""SELECT doc_id, source AS sender, lang AS receiver, ${duckCensor("d.text")} AS text
          |FROM documents d

@@ -15,9 +15,12 @@ import graft.ops.Moderation
   *   censor banned words -> Kafka `filtered-messages`
   *
   * The same pure DataFrame transforms as batch ([[Moderation]]) run
-  * under Structured Streaming; the blocked/words tables are static
-  * sides of a stream-static join, re-read each micro-batch — the
-  * GlobalKTable contract at micro-batch granularity (SURVEY §2 T4).
+  * under Structured Streaming. The blocked pairs and the word list are
+  * static state fixed when the query is defined: the blocked keys are
+  * collected once into a broadcast set that every micro-batch probes
+  * without re-reading the table. For a dimension that changes while the
+  * query runs (the GlobalKTable contract at micro-batch granularity,
+  * SURVEY §2 T4), use [[withLiveDimension]].
   *
   * Delivery semantics (SURVEY §2 T1): with a checkpointLocation the
   * aggregation/state is exactly-once; the Kafka sink itself is
@@ -85,9 +88,10 @@ object ModerationStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("1 second"))
 
-  /** The moderation transform, streaming-legal: stream-static LEFT ANTI
-    * broadcast join + narrow censor projection. Works identically on a
-    * batch or streaming `messages` frame.
+  /** The moderation transform, streaming-legal: a broadcast blocked-pair
+    * probe filter + narrow censor projection, with `blockedPairs`
+    * collected when this is called. Works identically on a batch or
+    * streaming `messages` frame.
     */
   def pipeline(messages: DataFrame, blockedPairs: DataFrame,
                banWords: Seq[String]): DataFrame =
@@ -152,10 +156,11 @@ object ModerationStream {
     * the reference re-probes its store per RECORD; a micro-batch is
     * the Spark unit of processing time, so within one batch the
     * dimension is a consistent snapshot — the documented (and for a
-    * consistent batch output, desirable) delta. A plain stream-static
-    * join would NOT give this: Spark resolves the static side's file
-    * listing once at query start, so dimension growth needs the
-    * foreachBatch re-read.
+    * consistent batch output, desirable) delta. [[pipeline]] would NOT
+    * give this: its blocked keys are fixed when the query is defined,
+    * so dimension growth needs the foreachBatch re-read. Each re-read
+    * lists the directory; an unchanged listing reuses the broadcast key
+    * set, a new or overwritten file builds a new one.
     */
   def withLiveDimension(messages: DataFrame, blockedDir: String,
                         banWords: Seq[String], checkpointDir: String)(

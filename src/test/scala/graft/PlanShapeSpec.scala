@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+
+import graft.functions.BlockedProbe
 
 /** Physical-plan shape assertions (SURVEY §4): the properties that make
   * these plans scale — pushed-down scans, broadcast (not shuffled)
@@ -36,16 +40,27 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("blocked-pair anti-join broadcasts the dimension, never shuffles messages") {
+    // dropBlocked probes a broadcast key set in a filter on the message
+    // side: no join, and no exchange but the ORDER BY's range exchange
     for (name <- Seq("anti_join_blocked", "moderation_pipeline")) {
-      val p = plan(name)
-      assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-        s"$name: expected broadcast LEFT ANTI:\n$p")
-      assert(!p.contains("SortMergeJoin"), s"$name: dimension join shuffled")
+      val p = physical(name)
+      val probes = p.collect {
+        case f: FilterExec if f.condition.exists(_.isInstanceOf[BlockedProbe]) => f
+      }
+      assert(probes.size === 1, s"$name: expected one blocked-probe filter:\n$p")
+      assert(probes.head.collectFirst { case s: FileSourceScanExec => s }.nonEmpty,
+        s"$name: probe filter is not on the message scan:\n$p")
+      assert(p.collectFirst { case j: BaseJoinExec => j }.isEmpty, s"$name: dimension joined:\n$p")
+      val exchanges = p.collect { case e: Exchange => e }
+      assert(exchanges.size === 1 && exchanges.forall {
+        case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }, s"$name: exchange other than the ORDER BY's:\n$p")
     }
-    // duplicate keys cannot change an anti/semi join, so the broadcast
-    // side must not be de-duplicated through a shuffle
-    for (name <- Seq("anti_join_blocked", "moderation_pipeline",
-                     "left_outer_null_probe", "semi_join_blocked")) {
+    // the reference join forms: duplicate keys cannot change an
+    // anti/semi join, so the broadcast side must not be de-duplicated
+    // through a shuffle
+    for (name <- Seq("left_outer_null_probe", "semi_join_blocked")) {
       val sides = physical(name).collect { case b: BroadcastExchangeExec => b.child }
       assert(sides.nonEmpty, s"$name: no broadcast side")
       sides.foreach(side => assert(side.collectFirst { case e: Exchange => e }.isEmpty,

@@ -50,6 +50,49 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("stream-static moderation reads the parquet dimension once, when the query is defined") {
+    implicit val ctx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft_static_dim").resolve("bk").toString
+    Seq("login1:login2", "login1:login3").toDF("bk").write.parquet(dir)
+    val mem = MemoryStream[Message]
+    val out = ModerationStream.pipeline(mem.toDF(), spark.read.parquet(dir), Seq("Политика"))
+    // every SQL execution from here on (the micro-batches) and each
+    // batch's physical plan: none may scan the dimension's files
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val q = out.writeStream.format("memory").queryName("mod_static_dim")
+      .outputMode("append").start()
+    try {
+      for (i <- 0 until 3) {
+        mem.addData(Message("login2", s"b$i", "login1"), Message("login4", s"Политика $i", "login1"))
+        q.processAllAvailable()
+        val batch = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan
+        val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+          .collectWithSubqueries(batch) {
+            case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths
+          }.flatten
+        assert(!scans.exists(_.toUri.getPath == dir), s"batch $i scans the dimension:\n$batch")
+      }
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      assert(plans.size >= 3, s"only ${plans.size} SQL executions seen over three micro-batches")
+      plans.forEach(p => assert(!p.contains(dir), s"an execution scans the dimension:\n$p"))
+      val rows = spark.table("mod_static_dim").select("sender", "text").as[(String, String)].collect()
+      assert(rows.sortBy(_._2).toSeq === (0 until 3).map(i => ("login4", s"******** $i")))
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("kafka wire format round-trip (F1/F2) incl. tombstones") {
     val raw = Seq(
       ("login4", """{"text":"Java","receiver":"login1"}"""),
