@@ -15,28 +15,18 @@ object Bench {
     // optional args = query-name filter (local iteration on a subset;
     // the driver passes none and gets the full suite)
     val only: Set[String] = args.toSet
+    val suite = SparkEntry.select(only)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = Session.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate duplicates the generator input into a
-      // pre-exchange filter; for expensive generators (shingling) that
-      // re-evaluates the costliest expression 2x in the scan stage.
-      // Measured: doc_fingerprint 7.9s -> 1.1s at sf0.1 with it off,
-      // no query slower.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       // ~60 queries x ~10 codegen stages far exceed the default
       // 100-entry generated-class cache, so every timed pass would
       // re-run janino on every stage (the dominant cost: a warm fresh
       // session runs a 1.3s bench query in 0.16s). Size the cache to
       // hold the whole suite.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def runOnce(q: graft.queries.Q): Double = {
@@ -58,14 +48,6 @@ object Bench {
     // ~5x on the first queries and not what's being measured); then two
     // timed passes, reporting the per-query minimum — a single pass is
     // vulnerable to transient host load (observed 2.5x total swings)
-    // fail loudly on typo'd filter names (same contract as Verify) —
-    // a silently-empty suite prints a zero-total JSON that looks like
-    // a broken bench downstream
-    val unknown = only.diff(SparkEntry.allQueries.map(_.name).toSet)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val suite =
-      if (only.isEmpty) SparkEntry.allQueries
-      else SparkEntry.allQueries.filter(q => only(q.name))
     suite.foreach(runOnce)
     val pass1 = suite.map(q => q.name -> runOnce(q)).toMap
     val results = suite.map(q =>

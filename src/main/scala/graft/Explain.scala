@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * more registered queries without executing them.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
-  * (no names = all queries). Same session config as Verify so the
+  * (no names = all queries; an unknown name fails before the session
+  * starts). The session goes through [[Session.configure]], so the
   * audited plan is the shipped plan.
   */
 object Explain {
@@ -18,27 +19,16 @@ object Explain {
       case Some(d) if new java.io.File(d).isDirectory => (d, args.drop(1).toSeq)
       case _ => ("/root/testdata/sf0.001", args.toSeq)
     }
-    val names = if (rest.nonEmpty) rest
-                else SparkEntry.allQueries.map(_.name)
-    val spark = SparkSession.builder()
+    val suite = SparkEntry.select(rest.toSet)
+    val spark = Session.configure(SparkSession.builder())
       .appName("graft-explain").master("local[4]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val byName = SparkEntry.allQueries.map(q => q.name -> q).toMap
-    names.foreach { n =>
-      println(s"\n===== $n =====")
-      byName.get(n) match {
-        case Some(q) => println(q.run(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        case None => println(s"unknown query: $n")
-      }
+    suite.foreach { q =>
+      println(s"\n===== ${q.name} =====")
+      println(q.run(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()
   }

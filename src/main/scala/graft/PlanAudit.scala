@@ -10,11 +10,11 @@ import org.apache.spark.sql.SparkSession
   * kind, join strategies, windows, generators) and write one markdown
   * table to PLANS.md — the mechanical evidence behind SCALE.md's
   * prose. Plans are compiled, not executed (a full audit runs in
-  * seconds), against the same session config Verify/Bench ship, so
-  * the audited plan is the shipped plan. With AQE enabled the string
-  * is the INITIAL plan — runtime re-planning (broadcast demotion,
-  * skew splits) only ever removes exchanges, so the static counts are
-  * upper bounds.
+  * seconds), in a session built by [[Session.configure]] like
+  * Verify's and Bench's, so the audited plan is the shipped plan.
+  * With AQE enabled the string is the INITIAL plan — runtime
+  * re-planning (broadcast demotion, skew splits) only ever removes
+  * exchanges, so the static counts are upper bounds.
   *
   * Usage: runMain graft.PlanAudit [sfDir] [outFile]
   */
@@ -40,15 +40,9 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
+    val spark = Session.configure(SparkSession.builder())
       .appName("graft-plan-audit").master("local[4]")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -22,7 +22,7 @@ import graft.ops.{Dedup, Similarity, TextAnalysis}
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = Session.configure(SparkSession.builder()).master("local[32]")
       // shuffle partitions SCALE with the replicated volume — the
       // production sizing rule SCALE.md states (size partitions so a
       // task's join build / sort fits executor memory at the target
@@ -32,13 +32,8 @@ object ScaleSmoke {
       // relations per task and die; at 8·mult partitions they fit.
       .config("spark.sql.shuffle.partitions",
         math.max(32, 8 * mult).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      // the codegen cache sized as in Bench: the whole probe battery
+      .config("spark.sql.codegen.cache.maxEntries", "5000").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"
 

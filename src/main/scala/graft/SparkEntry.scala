@@ -22,6 +22,17 @@ object SparkEntry {
       TestBatteryQueries.all ++ WebCurationQueries.all ++ HtmlQueries.all ++
       PreferenceQueries.all
 
+  /** The registered queries named in `names`, in registry order; all of
+    * them when `names` is empty. Fails on an unknown name: a typo must
+    * not turn into a silently empty run.
+    */
+  def select(names: Set[String]): Seq[Q] = {
+    val all = allQueries
+    val unknown = names.diff(all.map(_.name).toSet)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    if (names.isEmpty) all else all.filter(q => names(q.name))
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("moderation_pipeline")(spark, "/root/testdata/sf0.001")

@@ -9,37 +9,19 @@ object Verify {
     val outDir = args(1)
     // optional trailing args = query-name filter (local iteration;
     // the driver passes exactly two args and gets the full suite)
-    val only: Set[String] = args.drop(2).toSet
+    val suite = SparkEntry.select(args.drop(2).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = Session.configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate duplicates the generator input into a
-      // pre-exchange filter; for expensive generators (shingling) that
-      // re-evaluates the costliest expression 2x in the scan stage.
-      // Measured: doc_fingerprint 7.9s -> 1.1s at sf0.1 with it off,
-      // no query slower.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // fail loudly on typo'd filter names — a silently-empty filter
-    // writes nothing and looks like a query bug downstream
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val suite =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
-    suite.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    suite.foreach { query =>
+      try query.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${query.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
       }
       // release any localCheckpoint blocks the query materialized —
       // nothing persists across queries by design (see Bench.runOnce)

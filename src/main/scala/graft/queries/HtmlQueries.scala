@@ -323,7 +323,7 @@ object Html {
     * replication), so iterating it through the scheduler was 3 rounds
     * × (2 joins + 1 aggregate) of pure fixed overhead — measured
     * 1.011 s for rankNanos vs 0.547 s for the edge census itself at
-    * sf0.1 (StageProfile cf_rank_nanos/cf_outlink_edges). The local
+    * sf0.1 (round 15, timed through the noop sink). The local
     * replay below performs the EXACT same operations in the exact
     * same order: c = floor(r·w/ow + 0.5) with the long r widening to
     * double at the multiply and ow at the divide (Catalyst's

@@ -9,15 +9,15 @@ import java.util.Properties
   * the moment the two standard jars are on the classpath:
   *
   *  - `spark-sql-kafka-0-10_2.13` (+ its `spark-token-provider-...`)
-  *    — gives Spark the `format("kafka")` source/sink that
-  *    [[ModerationStream.fromKafka]]/`toKafka` name by string;
+  *    — gives Spark the `format("kafka")` source that
+  *    [[ModerationStream.fromKafka]] names by string;
   *  - `kafka-clients` — gives this file `KafkaProducer` /
   *    `KafkaConsumer` / `AdminClient` to bind against.
   *
   * With those present and a broker reachable (the reference runs one
   * via docker-compose — reference docker/docker-compose.yml:13-33),
-  * `KafkaWireSpec` drives [[ModerationStream.runTransactional]]'s
-  * query end-to-end over real topics: fixture messages in, EOS-v2
+  * `KafkaWireSpec` drives [[ModerationStream.transactionalQuery]]
+  * end-to-end over real topics: fixture messages in, EOS-v2
   * transactional moderation out, read back with
   * `isolation.level=read_committed`. Here the spec cancels cleanly
   * (assume()) because the jars are absent — the semantics themselves
@@ -139,7 +139,7 @@ object KafkaWire {
     def close(): Unit = call(producer, "close")
   }
 
-  /** The factory [[ModerationStream.runTransactional]] takes. Carries
+  /** The factory [[ModerationStream.transactionalQuery]] takes. Carries
     * only the bootstrap string (Serializable — it ships into the
     * foreachPartition closure); the ledger read opens a short-lived
     * read_committed consumer, drains the control topic, and returns

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.Row
 
@@ -22,12 +22,12 @@ import graft.ops.Moderation
   * query runs (the GlobalKTable contract at micro-batch granularity,
   * SURVEY §2 T4), use [[withLiveDimension]].
   *
-  * Delivery semantics (SURVEY §2 T1): with a checkpointLocation the
-  * aggregation/state is exactly-once; the Kafka sink itself is
-  * at-least-once (duplicates possible on retry). The reference's
-  * EXACTLY_ONCE_V2 can be matched end-to-end by writing through
-  * `foreachBatch` with an idempotent keyed upsert, or by using a
-  * transactional/file sink.
+  * Delivery semantics (SURVEY §2 T1): exactly-once end to end, as the
+  * reference's EXACTLY_ONCE_V2. The one Kafka output,
+  * [[transactionalQuery]], commits each micro-batch in one Kafka
+  * transaction through [[KafkaEos.toKafkaTransactional]]; the file
+  * output, [[toExactlyOnceFiles]], overwrites one directory per batch
+  * id. Spark's built-in at-least-once Kafka sink is not used.
   */
 object ModerationStream {
 
@@ -78,16 +78,6 @@ object ModerationStream {
     df.select(col("sender").as("key"),
       to_json(struct(col("text"), col("receiver"))).as("value"))
 
-  /** S4: produce to the filtered topic, checkpointed. */
-  def toKafka(df: DataFrame, bootstrap: String, topic: String,
-              checkpointDir: String): DataStreamWriter[Row] =
-    encodeKafka(df).writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-
   /** The moderation transform, streaming-legal: a broadcast blocked-pair
     * probe filter + narrow censor projection, with `blockedPairs`
     * collected when this is called. Works identically on a batch or
@@ -97,41 +87,21 @@ object ModerationStream {
                banWords: Seq[String]): DataFrame =
     Moderation.pipeline(messages, blockedPairs, banWords)
 
-  /** Full job wiring (requires a live broker; exercised by integration
-    * environments — unit tests drive [[pipeline]] via MemoryStream).
-    */
-  def run(spark: SparkSession, bootstrap: String, blockedPairs: DataFrame,
-          banWords: Seq[String], checkpointDir: String): Unit = {
-    val out = pipeline(fromKafka(spark, bootstrap), blockedPairs, banWords)
-    toKafka(out, bootstrap, "filtered-messages", checkpointDir)
-      .start().awaitTermination()
-  }
-
-  /** [[run]] with the EOS-v2 TRANSACTIONAL sink instead of the plain
-    * producer: the same moderation pipeline, but every micro-batch
-    * commits atomically (data + batch-ledger marker in one Kafka
-    * transaction, per-partition stable transactional ids for zombie
-    * fencing, ledger-gated replay skip — [[KafkaEos]]). This is the
-    * drop-in seam for a real broker: wrap `new KafkaProducer(props)`
-    * (transactional.id = the id this passes, enable.idempotence on)
-    * in a [[KafkaEos.TxProducerFactory]] and the semantics KafkaEosSpec
-    * pins against the in-memory broker carry over unchanged —
-    * the reference's `exactly_once_v2` contract
-    * (reference KafkaStreamApp.java:124-126).
-    */
-  def runTransactional(spark: SparkSession, bootstrap: String,
-                       blockedPairs: DataFrame, banWords: Seq[String],
-                       checkpointDir: String,
-                       factory: KafkaEos.TxProducerFactory): Unit =
-    transactionalQuery(spark, bootstrap, blockedPairs, banWords,
-      checkpointDir, factory).start().awaitTermination()
-
-  /** [[runTransactional]]'s query, unstarted — the seam a harness
-    * (KafkaWireSpec against a real broker) drives with
-    * processAllAvailable/stop instead of awaitTermination, and a
-    * deployment wraps in its own lifecycle. Topic names are
-    * parameterized so concurrent test runs don't collide; the
-    * defaults are the reference's.
+  /** S4, the one Kafka output: the full job wiring, `messages` in,
+    * `filtered-messages` out through the EOS-v2 TRANSACTIONAL sink.
+    * Every micro-batch commits atomically (data + batch-ledger marker
+    * in one Kafka transaction, per-partition stable transactional ids
+    * for zombie fencing, ledger-gated replay skip — [[KafkaEos]]): the
+    * reference's `exactly_once_v2` contract (reference
+    * KafkaStreamApp.java:124-126). The query is returned unstarted: a
+    * harness (KafkaWireSpec against a real broker) drives it with
+    * processAllAvailable/stop, a deployment with `start()` and its own
+    * lifecycle. For a real broker, wrap `new KafkaProducer(props)`
+    * (transactional.id = the id this passes, enable.idempotence on) in
+    * a [[KafkaEos.TxProducerFactory]] ([[KafkaWire.ReflectiveKafkaFactory]]) and the
+    * semantics KafkaEosSpec pins against the in-memory broker carry
+    * over unchanged. Topic names are parameterized so concurrent test
+    * runs don't collide; the defaults are the reference's.
     */
   def transactionalQuery(spark: SparkSession, bootstrap: String,
                          blockedPairs: DataFrame, banWords: Seq[String],

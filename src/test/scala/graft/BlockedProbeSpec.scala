@@ -146,7 +146,7 @@ class BlockedProbeSpec extends SparkSpec {
     val opens = (0 until args.size).map(args.get).filter(_.startsWith("--add-opens"))
     val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val log = Files.createTempFile("stopped_context", ".log").toFile
-    val cmd = Seq(javaBin, "-Xmx1g", "-Dspark.ui.enabled=false") ++ opens ++
+    val cmd = Seq(javaBin, "-Xmx1g") ++ opens ++
       Seq("-cp", System.getProperty("java.class.path"), "graft.StoppedContextCheck")
     val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log).start()
     val done = proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
@@ -203,8 +203,8 @@ object StoppedContextCheck {
 
   def main(args: Array[String]): Unit = {
     def run(): (Broadcast[BlockedKeys], Seq[String]) = {
-      val s = SparkSession.builder().master("local[1]").appName("stopped-context")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val s = Session.configure(SparkSession.builder())
+        .master("local[1]").appName("stopped-context").getOrCreate()
       import s.implicits._
       val df = Moderation.dropBlocked(
         Seq(Message("s1", "a", "r1"), Message("s2", "b", "r2")).toDF(), Seq("r1:s1").toDF("bk"))

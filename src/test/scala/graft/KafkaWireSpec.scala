@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.{KafkaWire, ModerationStream}
 
 /** The REAL-WIRE golden test — the one seam no in-memory twin can
-  * cover: [[ModerationStream.runTransactional]]'s query moving actual
+  * cover: [[ModerationStream.transactionalQuery]] moving actual
   * bytes through an actual Kafka broker with EOS-v2 transactions,
   * reproducing the reference's README flow (reference README.md:53-54:
   * four fixture messages in, `login4 -> Java` and

@@ -23,6 +23,16 @@ class QueriesSpec extends SparkSpec {
     assert(names.distinct.size === names.size)
   }
 
+  test("select: no names is the registry, a name its query, an unknown name fails") {
+    def named(qs: Seq[graft.queries.Q]) = qs.map(q => (q.name, q.oracle))
+    assert(named(SparkEntry.select(Set.empty)) === named(SparkEntry.allQueries))
+    assert(SparkEntry.select(Set("anti_join_blocked")).map(_.name) === Seq("anti_join_blocked"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Set("anti_join_blocked", "no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
+    assert(!e.getMessage.contains("anti_join_blocked"))
+  }
+
   for (q <- SparkEntry.allQueries) {
     test(s"${q.name} runs and returns rows at sf0.001") {
       val df = q.run(spark, sf0001)

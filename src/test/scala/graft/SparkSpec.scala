@@ -3,19 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt),
+  * with the shipped settings of [[Session.configure]].
+  */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Session.configure(SparkSession.builder())
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    // mirrors Bench/Verify: see the comment there on generator cost
-    .config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 
