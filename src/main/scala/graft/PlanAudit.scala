@@ -9,9 +9,12 @@ import org.apache.spark.sql.SparkSession
   * count the plan shapes that decide scale behavior (exchanges by
   * kind, join strategies, windows, generators) and write one markdown
   * table to PLANS.md — the mechanical evidence behind SCALE.md's
-  * prose. Plans are compiled, not executed (a full audit runs in
-  * seconds), in a session built by [[Session.configure]] like
-  * Verify's and Bench's, so the audited plan is the shipped plan.
+  * prose. Plans are compiled, not executed, but building some
+  * queries' DataFrames runs Spark jobs (`dropBlocked`, for one,
+  * collects the blocked key set when it is defined), so a full audit
+  * at sf0.001 took 125-157 s on a 4-core VM. The session is built by
+  * [[Session.configure]] like Verify's and Bench's, so the audited
+  * plan is the shipped plan.
   * With AQE enabled the string is the INITIAL plan — runtime
   * re-planning (broadcast demotion, skew splits) only ever removes
   * exchanges, so the static counts are upper bounds.

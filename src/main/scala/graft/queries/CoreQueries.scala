@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.MessageJson
 import graft.ops.Moderation
 
 /** SURVEY.md §2 parity operators as named, DuckDB-oracle-checked queries
@@ -175,14 +176,15 @@ object CoreQueries {
         .orderBy("event_id")
     },
 
-    // F1: JSON encode of the Message shape
+    // F1: JSON encode of the Message shape, by the encoder encodeKafka
+    // writes the wire with
     Q("json_encode",
       """SELECT doc_id,
         |  CAST(to_json(struct_pack(text := text, receiver := lang)) AS VARCHAR) AS msg_json
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
       docs(s, dir)
         .select(col("doc_id"),
-          to_json(struct(col("text"), col("lang").as("receiver"))).as("msg_json"))
+          MessageJson.encode(col("text"), col("lang")).as("msg_json"))
         .orderBy("doc_id")
     },
 

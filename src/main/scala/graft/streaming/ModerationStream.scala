@@ -3,9 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.Row
 
+import graft.functions.MessageJson
 import graft.ops.Moderation
 
 /** Streaming form of the flagship moderation pipeline — the direct
@@ -31,11 +32,6 @@ import graft.ops.Moderation
   */
 object ModerationStream {
 
-  /** Message.java:3 — {text, receiver}, JSON on the wire (F1/F2). */
-  val messageSchema: StructType = StructType(Seq(
-    StructField("text", StringType, nullable = true),
-    StructField("receiver", StringType, nullable = true)))
-
   /** S1: subscribe to the messages topic from the earliest offset. */
   def fromKafka(spark: SparkSession, bootstrap: String,
                 topic: String = "messages"): DataFrame =
@@ -46,37 +42,41 @@ object ModerationStream {
       .option("startingOffsets", "earliest") // T2 parity
       .load())
 
-  /** F2: Kafka record -> (sender, text, receiver). Null/empty payloads
-    * decode to null fields (MessageSerdes.java:54-56 tombstone
-    * semantics); malformed JSON yields nulls rather than the
-    * reference's crash — strict parity would set mode=FAILFAST.
+  /** F2: Kafka record -> (sender, text, receiver), parsed by the native
+    * [[MessageJson.Decode]]: one scan of the value's bytes, with Spark's
+    * `from_json` PERMISSIVE as the fallback for anything outside the
+    * plain `{text, receiver}` object, so the result is `from_json`'s.
+    * Null/empty payloads decode to null fields (MessageSerdes.java:54-56
+    * tombstone semantics); malformed JSON yields nulls rather than the
+    * reference's crash — strict parity is [[decodeKafkaStrict]].
     */
-  def decodeKafka(raw: DataFrame): DataFrame =
-    raw.select(
-        col("key").cast("string").as("sender"),
-        from_json(col("value").cast("string"), messageSchema).as("m"))
-      .select(col("sender"), col("m.text").as("text"),
-        col("m.receiver").as("receiver"))
+  def decodeKafka(raw: DataFrame): DataFrame = decode(raw, failFast = false)
 
   /** F2 strict parity: the reference CRASHES the pipeline on malformed
-    * JSON (MessageSerdes.java:57-62 throws; no dead-lettering).
-    * FAILFAST reproduces that contract; [[decodeKafka]]'s null-row
-    * behavior is the production-sane default. NOTE: empty/null payloads
-    * are still tombstones (null message), not errors, on both paths —
-    * from_json only fails on non-null unparseable input.
+    * JSON (MessageSerdes.java:57-62 throws; no dead-lettering). The same
+    * native decoder with `from_json` FAILFAST as its fallback reproduces
+    * that contract; [[decodeKafka]]'s null-row behavior is the
+    * production-sane default. NOTE: empty/null payloads are still
+    * tombstones (null message), not errors, on both paths — FAILFAST
+    * only fails on non-null unparseable input.
     */
-  def decodeKafkaStrict(raw: DataFrame): DataFrame =
+  def decodeKafkaStrict(raw: DataFrame): DataFrame = decode(raw, failFast = true)
+
+  private def decode(raw: DataFrame, failFast: Boolean): DataFrame =
     raw.select(
-        col("key").cast("string").as("sender"),
-        from_json(col("value").cast("string"), messageSchema,
-          Map("mode" -> "FAILFAST")).as("m"))
+        col("key").cast(StringType).as("sender"),
+        MessageJson.decode(col("value"), failFast).as("m"))
       .select(col("sender"), col("m.text").as("text"),
         col("m.receiver").as("receiver"))
 
-  /** F1: (sender, text, receiver) -> Kafka key/value. */
+  /** F1: (sender, text, receiver) -> Kafka key/value, written by the
+    * native [[MessageJson.Encode]]: the bytes of
+    * `to_json(struct(text, receiver))` (null fields omitted, Jackson's
+    * escaping) without a JSON generator per row.
+    */
   def encodeKafka(df: DataFrame): DataFrame =
     df.select(col("sender").as("key"),
-      to_json(struct(col("text"), col("receiver"))).as("value"))
+      MessageJson.encode(col("text"), col("receiver")).as("value"))
 
   /** The moderation transform, streaming-legal: a broadcast blocked-pair
     * probe filter + narrow censor projection, with `blockedPairs`

@@ -1,12 +1,22 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, StructsToJson}
+import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, InputAdapter, ProjectExec,
+  SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.ObjectType
 
-import graft.functions.BlockedProbe
+import graft.functions.{BlockedProbe, MessageJson}
+import graft.ops.Moderation
+import graft.streaming.ModerationStream
 
 /** Physical-plan shape assertions (SURVEY §4): the properties that make
   * these plans scale — pushed-down scans, broadcast (not shuffled)
@@ -65,6 +75,57 @@ class PlanShapeSpec extends SparkSpec {
       assert(sides.nonEmpty, s"$name: no broadcast side")
       sides.foreach(side => assert(side.collectFirst { case e: Exchange => e }.isEmpty,
         s"$name: broadcast side shuffles:\n$side"))
+    }
+  }
+
+  test("kafka wire path: one native codec, whole-stage codegen'd, no Jackson") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("wire").resolve("raw").toString
+    Seq(("s1", """{"text":"Java rocks","receiver":"r1"}"""),
+        ("s2", """{"text":"hi","receiver":"r2"}"""), // blocked pair r2:s2
+        ("s3", "{not json"), ("s4", null: String))
+      .toDF("key", "value")
+      .select(col("key").cast("binary").as("key"), col("value").cast("binary").as("value"))
+      .write.parquet(dir)
+    val before = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val out = ModerationStream.encodeKafka(Moderation.pipeline(
+        ModerationStream.decodeKafka(spark.read.parquet(dir)), Seq("r2:s2").toDF("bk"), Seq("java")))
+      val optimized = out.queryExecution.optimizedPlan
+      val exprs = optimized.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      val jackson = exprs.filter {
+        case _: JsonToStructs | _: StructsToJson => true
+        case i: Invoke => i.targetObject.dataType == ObjectType(classOf[StructsToJsonEvaluator])
+        case _ => false
+      }
+      assert(jackson.isEmpty, s"Jackson on the wire path:\n$optimized")
+      // one parse in the decode projection, one copied into the probe
+      // filter by predicate pushdown, one encode
+      assert(exprs.count(_.isInstanceOf[MessageJson.Decode]) === 2, s"decode count:\n$optimized")
+      assert(exprs.count(_.isInstanceOf[MessageJson.Encode]) === 1, s"encode count:\n$optimized")
+
+      val p = out.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case q => q
+      }
+      def stage(q: SparkPlan): Seq[SparkPlan] = q match {
+        case _: InputAdapter => Nil
+        case _ => q +: q.children.flatMap(stage)
+      }
+      val fused = p.collect { case w: WholeStageCodegenExec => stage(w.child) }.flatten
+      val wire = p.collect { case f: FilterExec => f; case q: ProjectExec => q }
+      assert(wire.exists {
+        case f: FilterExec => f.condition.exists(_.isInstanceOf[BlockedProbe])
+        case _ => false
+      }, s"no probe filter:\n$p")
+      assert(wire.nonEmpty && wire.forall(n => fused.exists(_ eq n)),
+        s"a wire operator runs outside whole-stage codegen:\n$p")
+      assert(out.as[(String, String)].collect().sortBy(_._1) === Array(
+        ("s1", """{"text":"**** rocks","receiver":"r1"}"""), ("s3", "{}"), ("s4", "{}")))
+    } finally before match {
+      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+      case None => spark.conf.unset("spark.sql.codegen.fallback")
     }
   }
 
