@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
@@ -36,7 +35,7 @@ case class CountMinSketchAgg(
     width: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with LongArrayBuffer {
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](depth * width)
 
@@ -60,17 +59,6 @@ case class CountMinSketchAgg(
   }
 
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong)
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -42,7 +40,7 @@ case class GramMatrixAgg(
     dim: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with LongArrayBuffer {
 
   private val tri = dim * (dim + 1) / 2
 
@@ -96,17 +94,6 @@ case class GramMatrixAgg(
     }
     out(dim * dim + dim) = buf(tri + dim)
     new GenericArrayData(out)
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong)
   }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.math.RoundingMode
-import java.nio.ByteBuffer
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -56,7 +55,7 @@ case class LloydUpdateAgg(
     subDim: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with LongArrayBuffer {
 
   private val m = codebooks.length
   private val k = codebooks.head.length
@@ -122,17 +121,6 @@ case class LloydUpdateAgg(
   }
 
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong)
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false

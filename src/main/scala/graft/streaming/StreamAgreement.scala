@@ -56,42 +56,20 @@ object StreamAgreement {
     (n, s, rd6(pbar), rd6(pe), kappa)
   }
 
-  /** Streaming wiring: checkpointed foreachBatch merging each batch's
-    * census into `state` (4 cells) and appending one audit row
-    * (batchId, n, n_votes, pbar, pe, kappa) through `sink`.
-    *
-    * Restart contract: `state` lives with the caller, NOT in the
-    * checkpoint — after a restart the checkpoint skips already-
-    * processed batches, so the caller must persist the four census
-    * cells alongside each audit row and re-seed `state` from the last
-    * one (the census IS the whole state, four exact integers). Same
-    * discipline as the signature-store queries: tiny exact state
-    * outlives the session in the sink.
-    *
-    * Replay contract: foreachBatch is at-least-once in TWO windows.
-    * (1) In-run retries repeat a batchId within one run; the merge
-    * tracks the last-applied id and skips the mutation, so
-    * merge-then-sink is idempotent per batchId. (2) A crash BETWEEN
-    * the census mutation and the checkpoint commit makes the NEXT run
-    * re-deliver that batch — a caller re-seeding `state` from the
-    * last persisted audit row must therefore also pass that row's
-    * batchId as `startAfter` (the id is on every audit row for
-    * exactly this purpose), or the replayed batch double-counts. A
-    * fresh run with zeroed cells keeps the default -1.
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] merging each
+    * batch's census into `state` (4 cells) and appending one audit row
+    * (batchId, n, n_votes, pbar, pe, kappa) through `sink`. The four
+    * cells are the whole state: a caller persists them with each audit
+    * row and re-seeds from the last one (restart contract in
+    * [[ReplayGuard]]).
     */
   def monitor(docs: DataFrame, checkpointDir: String, state: Array[Long],
               startAfter: Long = -1L)(
-      sink: ((Long, Long, Long, Double, Double, Option[Double])) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    var lastApplied = startAfter
-    docs.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          batchCensus(b).foreach { case (sv, m) => state(sv) += m }
-          lastApplied = id
-        }
-        val (n, s, pbar, pe, k) = kappaOf(state)
-        sink((id, n, s, pbar, pe, k))
-      }
-      .option("checkpointLocation", checkpointDir)
-  }
+      sink: ((Long, Long, Long, Double, Double, Option[Double])) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    ReplayGuard.foreachBatch(docs, checkpointDir, startAfter) { b =>
+      batchCensus(b).foreach { case (sv, m) => state(sv) += m }
+    } { (_, id) =>
+      val (n, s, pbar, pe, k) = kappaOf(state)
+      sink((id, n, s, pbar, pe, k))
+    }
 }

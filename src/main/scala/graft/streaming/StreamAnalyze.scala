@@ -21,9 +21,8 @@ import graft.functions.PortableHash.h32
   * the NDV estimates match the batch EXACTLY (StreamingSpec pins two
   * shuffled deliveries equal to the one-pass batch profile, and the
   * estimate inside the 3σ band of the exact distinct count). Counts
-  * are additive, so in-run redelivery is guarded per batchId (the
-  * StreamSax contract); sketch and extrema would tolerate redelivery
-  * even unguarded.
+  * are additive, so redelivery is cut by [[ReplayGuard]]; sketch and
+  * extrema would tolerate it even unguarded.
   *
   * Scale shape: each micro-batch reduces map-side to a ≤1024-row
   * register census per column (ONE job for all columns via a
@@ -117,31 +116,22 @@ object StreamAnalyze {
     if (e <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) else e
   }
 
-  /** Streaming wiring: checkpointed foreachBatch folding each batch's
-    * profile into the caller-owned ledger (batchId-guarded for the
-    * additive counts) and emitting (batchId, col, n, nonNull, ndvEst)
-    * per column per micro-batch.
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] folding each
+    * batch's profile into the caller-owned ledger and emitting
+    * (batchId, col, n, nonNull, ndvEst) per column per micro-batch.
     */
   def monitor(rows: DataFrame, cols: Seq[(String, Boolean)],
               checkpointDir: String,
               state: scala.collection.mutable.Map[String, ColProfile],
               startAfter: Long = -1L)(
-      sink: ((Long, String, Long, Long, Double)) => Unit): DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    rows.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          batchProfile(b, cols).foreach { case (c, p) =>
-            state(c) = state.get(c).map(merge(_, p)).getOrElse(p)
-          }
-          lastApplied = id
-        }
-        cols.map(_._1).sorted.foreach { c =>
-          state.get(c).foreach { p =>
-            sink((id, c, p.n, p.nonNull, estimate(p)))
-          }
+      sink: ((Long, String, Long, Long, Double)) => Unit): DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(rows, checkpointDir, startAfter) { b =>
+      ReplayGuard.mergeInto(state, batchProfile(b, cols))(merge)
+    } { (_, id) =>
+      cols.map(_._1).sorted.foreach { c =>
+        state.get(c).foreach { p =>
+          sink((id, c, p.n, p.nonNull, estimate(p)))
         }
       }
-      .option("checkpointLocation", checkpointDir)
-  }
+    }
 }

@@ -17,10 +17,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *
   * Production split, as in StreamAgreement: the per-batch census
   * aggregation runs DISTRIBUTED; only census rows collect (the
-  * bounded-collect contract). The merge is idempotent per batchId
-  * against in-run foreachBatch retries; across restarts the caller
-  * re-seeds `state` from its sink, the same tiny-exact-state
-  * discipline as the other census twins.
+  * bounded-collect contract). The merge runs under [[ReplayGuard]].
   */
 object StreamConformal {
 
@@ -51,39 +48,21 @@ object StreamConformal {
     }
   }
 
-  /** Streaming wiring: checkpointed foreachBatch merging each batch's
-    * census into caller-owned `state` and emitting one
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] merging each
+    * batch's census into caller-owned `state` and emitting one
     * (batchId, event_type, n_cal, radius) row per type per batch.
-    *
-    * Restart contract: after a crash BETWEEN census mutation and the
-    * checkpoint commit, Spark re-delivers the last batch — so a
-    * caller that re-seeds `state` from persisted census cells MUST
-    * also pass the batchId those cells include as `startAfter`, or
-    * the replayed batch double-counts. The batchId rides on every
-    * sink row for exactly this purpose; persist it next to the
-    * census cells (the same tiny-exact-state discipline as
-    * StreamAgreement's audit rows). A fresh run with empty state
-    * keeps the default -1.
     */
   def monitor(residuals: DataFrame, checkpointDir: String,
               state: scala.collection.mutable.Map[(String, Long), Long],
               startAfter: Long = -1L)(
-      sink: ((Long, String, Long, Option[Long])) => Unit): DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    residuals.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          batchCensus(b).foreach { case (key, m) =>
-            state(key) = state.getOrElse(key, 0L) + m
-          }
-          lastApplied = id
-        }
-        // ONE pass over the census map, not one per type
-        state.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (tpe, cells) =>
-          val (n, r) = radiusOf(cells.map { case ((_, ar), m) => ar -> m }.toMap)
-          sink((id, tpe, n, r))
-        }
+      sink: ((Long, String, Long, Option[Long])) => Unit): DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(residuals, checkpointDir, startAfter) { b =>
+      ReplayGuard.mergeInto(state, batchCensus(b))(_ + _)
+    } { (_, id) =>
+      // ONE pass over the census map, not one per type
+      state.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (tpe, cells) =>
+        val (n, r) = radiusOf(cells.map { case ((_, ar), m) => ar -> m }.toMap)
+        sink((id, tpe, n, r))
       }
-      .option("checkpointLocation", checkpointDir)
-  }
+    }
 }

@@ -26,8 +26,7 @@ import graft.ops.Similarity
   * vector run DISTRIBUTED through the same broadcast-eval /
   * map-side-max shape as the batch query (shared cosine kernel, so
   * parity is structural down to the 6-dp rounding); only the 3-row
-  * census collects. The additive merge is batchId-guarded against
-  * checkpoint replays (StreamSax/StreamReputation contract).
+  * census collects. The additive merge runs under [[ReplayGuard]].
   */
 object StreamDecontamination {
 
@@ -89,28 +88,18 @@ object StreamDecontamination {
         else None)
     }
 
-  /** Streaming wiring: checkpointed foreachBatch merging each batch's
-    * census into caller-owned `state` (batchId-guarded) and emitting
-    * (batchId, sweep table) per micro-batch. `evalSet` is the static
-    * benchmark dimension.
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] merging each
+    * batch's census into caller-owned `state` and emitting (batchId,
+    * sweep table) per micro-batch. `evalSet` is the static benchmark
+    * dimension.
     */
   def monitor(vectors: DataFrame, evalSet: DataFrame, taus: Seq[Double],
               checkpointDir: String,
               state: scala.collection.mutable.Map[Double, TauCell],
               startAfter: Long = -1L)(
       sink: (Long, Seq[(Double, Long, Long, Double, Option[Double])]) => Unit)
-      : DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    vectors.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          batchCensus(b, evalSet, taus).foreach { case (t, cell) =>
-            state(t) = state.get(t).map(_.merge(cell)).getOrElse(cell)
-          }
-          lastApplied = id
-        }
-        sink(id, sweepRows(state))
-      }
-      .option("checkpointLocation", checkpointDir)
-  }
+      : DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(vectors, checkpointDir, startAfter) { b =>
+      ReplayGuard.mergeInto(state, batchCensus(b, evalSet, taus))(_ merge _)
+    } { (_, id) => sink(id, sweepRows(state)) }
 }

@@ -14,7 +14,7 @@ import graft.queries.Html
   * decide where its budget goes while the crawl is still running.
   *
   * Composition of two existing exactly-mergeable states, maintained
-  * here side by side under ONE batchId guard (both censuses advance
+  * here side by side under ONE [[ReplayGuard]] (both censuses advance
   * together or not at all, so a checkpoint-replayed batch can never
   * skew rank against reputation):
   *  - the domain-pair outlink edge census ([[StreamLinkGraph
@@ -53,35 +53,22 @@ object StreamFrontier {
     Html.frontierTable(edgeDf, profDf).collect()
   }
 
-  /** Streaming wiring: checkpointed foreachBatch merging each batch's
-    * edge + reputation censuses into caller-owned state (ONE batchId
-    * guard for both, so replays skip them atomically) and emitting
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] merging each
+    * batch's edge + reputation censuses into caller-owned state (one
+    * fold for both, so replays skip them atomically) and emitting
     * (batchId, frontier table) per micro-batch.
     */
   def monitor(docs: DataFrame, checkpointDir: String,
       edges: scala.collection.mutable.Map[(String, String), StreamLinkGraph.EdgeCell],
       domains: scala.collection.mutable.Map[String, StreamReputation.DomainCell],
       startAfter: Long = -1L)(
-      sink: (Long, Array[Row]) => Unit): DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    docs.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          // one distributed pass each over the batch (page synthesis +
-          // outlink extraction; profile projection) — both collect
-          // only dimension-bounded cells
-          StreamLinkGraph.batchCensus(
-            b.select(col("doc_id"), col("source"), col("text")))
-            .foreach { case (k, cell) =>
-              edges(k) = edges.get(k).map(_.merge(cell)).getOrElse(cell)
-            }
-          StreamReputation.batchCensus(b).foreach { case (d, cell) =>
-            domains(d) = domains.get(d).map(_.merge(cell)).getOrElse(cell)
-          }
-          lastApplied = id
-        }
-        sink(id, frontierRows(b.sparkSession, edges, domains))
-      }
-      .option("checkpointLocation", checkpointDir)
-  }
+      sink: (Long, Array[Row]) => Unit): DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(docs, checkpointDir, startAfter) { b =>
+      // one distributed pass each over the batch (page synthesis +
+      // outlink extraction; profile projection) — both collect
+      // only dimension-bounded cells
+      ReplayGuard.mergeInto(edges, StreamLinkGraph.batchCensus(
+        b.select(col("doc_id"), col("source"), col("text"))))(_ merge _)
+      ReplayGuard.mergeInto(domains, StreamReputation.batchCensus(b))(_ merge _)
+    } { (b, id) => sink(id, frontierRows(b.sparkSession, edges, domains)) }
 }

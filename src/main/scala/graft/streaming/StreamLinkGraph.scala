@@ -18,16 +18,14 @@ import graft.queries.Html
   * and distinct-page counts add too because a page's outlinks all
   * ride in the batch that delivers the page — a page contributes to
   * each (src, dst) cell exactly once, in exactly one batch (replays
-  * are cut by the batchId guard). State is bounded by the DOMAIN-PAIR
+  * are cut by [[ReplayGuard]]). State is bounded by the DOMAIN-PAIR
   * grid (dimension-sized), not the corpus.
   *
   * Production split: per batch, the synthesize → extract → explode →
   * per-edge census runs DISTRIBUTED through the batch queries' own
   * [[Html.pageProjection]] + [[Html.outlinkEdges]] (shared verbatim,
   * so parity is structural); only the |domain-pair|-bounded cells
-  * collect into the driver-held table. A caller re-seeding `state`
-  * passes the last persisted batchId as `startAfter` — same contract
-  * as StreamSax/StreamConformal/StreamReputation.
+  * collect into the driver-held table.
   */
 object StreamLinkGraph {
 
@@ -56,26 +54,16 @@ object StreamLinkGraph {
       (s, d, c.nLinks, c.nDocs)
     }
 
-  /** Streaming wiring: checkpointed foreachBatch merging each batch's
-    * census into caller-owned `state` (batchId-guarded against
-    * replays) and emitting (batchId, full edge table) per micro-batch.
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] merging each
+    * batch's census into caller-owned `state` and emitting (batchId,
+    * full edge table) per micro-batch.
     */
   def monitor(docs: DataFrame, checkpointDir: String,
               state: scala.collection.mutable.Map[(String, String), EdgeCell],
               startAfter: Long = -1L)(
       sink: (Long, Seq[(String, String, Long, Long)]) => Unit)
-      : DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    docs.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          batchCensus(b).foreach { case (k, cell) =>
-            state(k) = state.get(k).map(_.merge(cell)).getOrElse(cell)
-          }
-          lastApplied = id
-        }
-        sink(id, edgeRows(state))
-      }
-      .option("checkpointLocation", checkpointDir)
-  }
+      : DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(docs, checkpointDir, startAfter) { b =>
+      ReplayGuard.mergeInto(state, batchCensus(b))(_ merge _)
+    } { (_, id) => sink(id, edgeRows(state)) }
 }

@@ -19,7 +19,7 @@ import graft.ops.Multimodal.MediaFile
   * pure function of the bytes, and the ledger keys by media_id with
   * overwrite merge — a redelivered batch rewrites identical rows, so
   * retries cannot double-count (contrast StreamSax, whose additive
-  * census needs the batchId guard). That is exactly the property an
+  * census needs [[ReplayGuard]]). That is exactly the property an
   * idempotent file/table sink relies on at scale.
   *
   * Scale shape: the decode stage stays narrow map-side INSIDE each

@@ -23,8 +23,8 @@ import graft.queries.Preference
   * (flatMapGroupsWithState — the T6 state-store machinery), emits
   * each cross-source pair outcome EXACTLY ONCE (new arrival × roster,
   * plus new × new within the batch), and the downstream census merge
-  * is the usual batchId-guarded additive fold of a
-  * |sources|²-bounded frame.
+  * is the usual additive fold of a |sources|²-bounded frame under
+  * [[ReplayGuard]].
   *
   * State: one roster per prompt group, bounded at the group width (8
   * candidates, ~40 B each) — linear in corpus/8 groups, the same
@@ -83,35 +83,27 @@ object StreamPreference {
         OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Streaming wiring: checkpointed foreachBatch over the pair stream
-    * merging each batch's |sources|²-bounded (m, w1) deltas into
-    * caller-owned `census` (batchId-guarded) and emitting (batchId,
-    * full census rows in the batch query's (s1, s2) order).
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] over the pair
+    * stream merging each batch's |sources|²-bounded (m, w1) deltas
+    * into caller-owned `census` and emitting (batchId, full census
+    * rows in the batch query's (s1, s2) order).
     */
   def monitor(docs: DataFrame, checkpointDir: String,
               census: scala.collection.mutable.Map[(String, String), (Long, Long)],
               startAfter: Long = -1L)(
       sink: (Long, Seq[(String, String, Long, Long)]) => Unit)
-      : DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    pairStream(candidates(docs)).toDF()
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          b.groupBy("s1", "s2")
-            .agg(count(lit(1)).as("m"),
-              sum(when(col("win1"), 1L).otherwise(0L)).as("w1"))
-            .collect()
-            .foreach { r =>
-              val k = (r.getString(0), r.getString(1))
-              val (m0, w0) = census.getOrElse(k, (0L, 0L))
-              census(k) = (m0 + r.getLong(2), w0 + r.getLong(3))
-            }
-          lastApplied = id
-        }
-        sink(id, census.toSeq.sortBy(_._1)
-          .map { case ((s1, s2), (m, w)) => (s1, s2, m, w) })
+      : DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(pairStream(candidates(docs)).toDF(),
+        checkpointDir, startAfter) { b =>
+      ReplayGuard.mergeInto(census, b.groupBy("s1", "s2")
+        .agg(count(lit(1)).as("m"),
+          sum(when(col("win1"), 1L).otherwise(0L)).as("w1"))
+        .collect()
+        .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))) {
+        case ((m0, w0), (m, w)) => (m0 + m, w0 + w)
       }
-      .option("checkpointLocation", checkpointDir)
-  }
+    } { (_, id) =>
+      sink(id, census.toSeq.sortBy(_._1)
+        .map { case ((s1, s2), (m, w)) => (s1, s2, m, w) })
+    }
 }

@@ -25,10 +25,7 @@ import graft.queries.{SelectionQueries, WebCuration}
   * per-batch census aggregation runs DISTRIBUTED over the scan-fused
   * [[SelectionQueries.curationProfiles]] projection (the text is
   * parsed once, map-side); only |domains|-bounded cells collect. The
-  * additive merge needs the batchId guard against checkpoint-replayed
-  * batches (same contract as StreamSax/StreamConformal): the batchId
-  * rides on every sink emission, and a caller re-seeding `state`
-  * passes the last persisted batchId as `startAfter`.
+  * additive merge runs under [[ReplayGuard]].
   */
 object StreamReputation {
 
@@ -73,27 +70,16 @@ object StreamReputation {
         WebCuration.Blocklist.contains(d))
     }
 
-  /** Streaming wiring: checkpointed foreachBatch merging each batch's
-    * census into caller-owned `state` (batchId-guarded against
-    * replays) and emitting (batchId, full reputation table) per
-    * micro-batch.
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] merging each
+    * batch's census into caller-owned `state` and emitting (batchId,
+    * full reputation table) per micro-batch.
     */
   def monitor(docs: DataFrame, checkpointDir: String,
               state: scala.collection.mutable.Map[String, DomainCell],
               startAfter: Long = -1L)(
       sink: (Long, Seq[(String, Long, Long, Long, Double, Long, Boolean)]) => Unit)
-      : DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    docs.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          batchCensus(b).foreach { case (d, cell) =>
-            state(d) = state.get(d).map(_.merge(cell)).getOrElse(cell)
-          }
-          lastApplied = id
-        }
-        sink(id, profileRows(state))
-      }
-      .option("checkpointLocation", checkpointDir)
-  }
+      : DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(docs, checkpointDir, startAfter) { b =>
+      ReplayGuard.mergeInto(state, batchCensus(b))(_ merge _)
+    } { (_, id) => sink(id, profileRows(state)) }
 }

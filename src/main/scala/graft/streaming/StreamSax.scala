@@ -65,33 +65,21 @@ object StreamSax {
     }
   }
 
-  /** Streaming wiring: checkpointed foreachBatch merging each batch's
-    * census into caller-owned `state` (idempotent per batchId against
-    * in-run retries) and emitting (batchId, type, day, word) rows.
-    *
-    * Restart contract (as in StreamConformal): a caller re-seeding
-    * `state` from persisted census cells must pass the batchId those
-    * cells include as `startAfter` — the checkpoint re-delivers the
-    * last uncommitted batch, and without the id it double-counts.
+  /** Streaming wiring: [[ReplayGuard.foreachBatch]] merging each
+    * batch's census into caller-owned `state` and emitting (batchId,
+    * type, day, word) rows.
     */
   def monitor(hours: DataFrame, checkpointDir: String,
               state: scala.collection.mutable.Map[(String, Long, Long), (Long, Long, BigInt)],
               startAfter: Long = -1L)(
-      sink: ((Long, String, Long, Option[String])) => Unit): DataStreamWriter[Row] = {
-    var lastApplied = startAfter
-    hours.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (id > lastApplied) {
-          batchCensus(b).foreach { case (key, (s, m, q)) =>
-            val (s0, m0, q0) = state.getOrElse(key, (0L, 0L, BigInt(0)))
-            state(key) = (s0 + s, m0 + m, q0 + q)
-          }
-          lastApplied = id
-        }
-        wordsOf(state).toSeq.sortBy(k => (k._1._1, k._1._2)).foreach {
-          case ((tpe, day), w) => sink((id, tpe, day, w))
-        }
+      sink: ((Long, String, Long, Option[String])) => Unit): DataStreamWriter[Row] =
+    ReplayGuard.foreachBatch(hours, checkpointDir, startAfter) { b =>
+      ReplayGuard.mergeInto(state, batchCensus(b)) {
+        case ((s0, m0, q0), (s, m, q)) => (s0 + s, m0 + m, q0 + q)
       }
-      .option("checkpointLocation", checkpointDir)
-  }
+    } { (_, id) =>
+      wordsOf(state).toSeq.sortBy(k => (k._1._1, k._1._2)).foreach {
+        case ((tpe, day), w) => sink((id, tpe, day, w))
+      }
+    }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types.DecimalType
 
 /** Streaming windowed aggregations and custom keyed state (SURVEY §2
-  * T3/T6 extensions): tumbling/sliding/session windows with
+  * T3/T6 extensions): tumbling and session windows with
   * watermarked late-data handling, and `mapGroupsWithState` for
   * arbitrary per-key state — the principled form of the reference's
   * stateful `ValueTransformer` (its state was read-only, so batch maps
@@ -31,16 +31,6 @@ object WindowedAggs {
         sum(col("value").cast(DecimalType(12, 2))).cast("double").as("sum_value"))
       .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
         col("event_type"), col("n"), col("sum_value"))
-
-  /** Sliding windows (each event in window/slide windows). */
-  def slidingCounts(events: DataFrame, window_ : String = "10 minutes",
-                    slide: String = "5 minutes",
-                    watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("event_type"), col("n"))
 
   /** Session windows: dynamic gap-based windows, the streaming twin of
     * the batch `sessionize` query (same 30-minute gap semantics).
